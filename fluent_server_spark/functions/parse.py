@@ -8,16 +8,22 @@ and the row is quarantined downstream instead of killing the session
 (the reference closes the connection on any decode error,
 message/session.go:73-74 — a batch engine must not).
 
-Two implementations, identical output, selectable per pipeline config:
+Three implementations, identical output, selected by ``parse_turns(impl=)``
+(``PipelineConfig.parse_impl``):
 
+* :func:`parse_turns_map` — one anchored ``rlike`` for validity, then
+  ``str_to_map`` over the text with the quoted msg span cut out (Catalyst,
+  whole-stage codegen). ``impl='native'`` (the default) and ``'map'``
+  select it.
+* :func:`parse_turns_native` — one ``F.regexp_extract`` per field
+  (Catalyst); ``impl='regexp'``.
 * :func:`parse_turns_pandas` — Arrow-batched ``pandas_udf``; one
   precompiled ``re`` pattern applied via ``pd.Series.str.extract`` (C
-  loop, never per-row Python). This is the north_star's mandated shape
-  and the template for parse logic too gnarly for Catalyst regexps.
-* :func:`parse_turns_native` — ``F.regexp_extract`` (JVM, whole-stage
-  codegen). Faster for patterns Catalyst can express; the default.
+  loop, never per-row Python); ``impl='pandas'``. The template for parse
+  logic too gnarly for Catalyst regexps.
 
-Both use the same regex source string so semantics cannot drift.
+All three accept exactly the texts GROK_PATTERN matches, so which rows
+parse cannot drift between them.
 """
 
 from __future__ import annotations

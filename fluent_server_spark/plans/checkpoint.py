@@ -51,50 +51,55 @@ class CheckpointLog:
         different G would skip the wrong bucket sets (missing/duplicated
         sink partitions)."""
         out: dict[int, GroupCommit] = {}
-        if not os.path.exists(self.path):
-            return out
-        with open(self.path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                rec = GroupCommit(**json.loads(line))
-                if rec.run_id == run_id and rec.status == "committed":
-                    if (
-                        expected_n_groups is not None
-                        and rec.n_groups != expected_n_groups
-                    ):
-                        raise ValueError(
-                            f"run {run_id!r} was checkpointed with "
-                            f"n_groups={rec.n_groups}, cannot resume with "
-                            f"checkpoint_groups={expected_n_groups}: group "
-                            "ids do not map to the same bucket sets"
-                        )
-                    out[rec.group_id] = rec
+        for rec in self._records():
+            if rec.run_id == run_id and rec.status == "committed":
+                if (
+                    expected_n_groups is not None
+                    and rec.n_groups != expected_n_groups
+                ):
+                    raise ValueError(
+                        f"run {run_id!r} was checkpointed with "
+                        f"n_groups={rec.n_groups}, cannot resume with "
+                        f"checkpoint_groups={expected_n_groups}: group "
+                        "ids do not map to the same bucket sets"
+                    )
+                out[rec.group_id] = rec
         return out
 
     def all_committed(self) -> list[GroupCommit]:
         """All committed records in log (= commit) order — the manifest
         stream snapshot reads replay."""
-        out: list[GroupCommit] = []
+        return [rec for rec in self._records() if rec.status == "committed"]
+
+    def _records(self):
+        """Every record in log order. An unterminated last line is a
+        commit torn by a crash before its fsync returned, so it never
+        counted as committed and is skipped; a malformed line with more
+        lines after it is damage this log cannot explain, and raises."""
         if not os.path.exists(self.path):
-            return out
+            return
         with open(self.path) as f:
             for line in f:
+                if not line.endswith("\n"):
+                    return
                 line = line.strip()
-                if not line:
-                    continue
-                rec = GroupCommit(**json.loads(line))
-                if rec.status == "committed":
-                    out.append(rec)
-        return out
+                if line:
+                    yield GroupCommit(**json.loads(line))
 
     def commit(self, rec: GroupCommit) -> None:
         # single atomic append per group; fsync so a crash right after the
         # sink write either has the record (skip on resume) or not (replay,
         # which dynamic-overwrite makes idempotent)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(asdict(rec)) + "\n")
+        with open(self.path, "a+b") as f:
+            # drop a torn last line (see _records) so this record starts
+            # a fresh line instead of being glued onto it
+            end = f.seek(0, os.SEEK_END)
+            if end:
+                f.seek(end - 1)
+                if f.read(1) != b"\n":
+                    f.seek(0)
+                    f.truncate(f.read().rfind(b"\n") + 1)
+            f.write((json.dumps(asdict(rec)) + "\n").encode())
             f.flush()
             os.fsync(f.fileno())
 

@@ -78,7 +78,9 @@ def _list_partitions(write_root: str, group_id: int, n_groups: int) -> list[str]
 class PipelineConfig:
     sinks_path: str
     checkpoint_path: str
-    parse_impl: str = "native"  # 'native' (Catalyst) | 'pandas' (Arrow UDF)
+    # 'native' / 'map' (Catalyst str_to_map, parse_turns_map) | 'regexp'
+    # (Catalyst regexp_extract) | 'pandas' (Arrow UDF); see parse_turns
+    parse_impl: str = "native"
     n_buckets: int = 32
     n_salt: int = 8
     checkpoint_groups: int = 1

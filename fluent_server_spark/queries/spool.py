@@ -8,7 +8,7 @@ flagged the old tempdir side effect as a plausible reason a stricter
 sandbox skipped this query). tests/test_fluentfile.py regenerates the
 bytes and asserts they equal the committed files, so codec drift cannot
 silently stale the fixture. The files decode through the FULL Spark path
-(binaryFile scan -> mapInPandas msgpack decode), then aggregate. The
+(binaryFile scan -> mapInArrow msgpack decode), then aggregate. The
 oracle is the same aggregate computed by INDEPENDENT pure-Python dict
 arithmetic straight from the entry spec — it never touches the msgpack
 codec — rendered as a VALUES literal, so an encode/decode bug on either

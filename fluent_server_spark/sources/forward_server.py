@@ -41,11 +41,18 @@ Timestamps accept both integer epoch seconds and the EventTime ext(0)
 sec+nsec encoding and round-trip LOSSLESSLY into the spool (the segment
 stores the original entry bytes for packed modes, and re-encodes via
 encode_entry for Message/Forward).
+
+Framing: a FrameScanner finds where each frame ends by reading only
+msgpack headers and length fields, resuming across reads, and each frame
+is decoded once, when complete, from its own bytes (`read_frame`). A
+frame that spans N reads therefore costs one scan plus one decode, not N
+decodes from its first byte.
 """
 
 from __future__ import annotations
 
 import asyncio
+import collections
 import gzip as _gzip
 import hashlib
 import hmac
@@ -62,24 +69,145 @@ from fluent_server_spark.sources.fluentfile import (
     encode_entry,
 )
 
+# lead byte -> size of a whole value that has no length field and no
+# items (fixints, nil/bool, fixstr, fixed-width numbers, fixext, empty
+# fixmap/fixarray); 0 = the lead byte starts a length-prefixed value, a
+# container with items, or is the never-used 0xc1
+_FIXED_SIZE = bytearray(256)
+for _c in [*range(0x00, 0x80), *range(0xE0, 0x100), 0x80, 0x90, 0xC0, 0xC2, 0xC3]:
+    _FIXED_SIZE[_c] = 1
+for _c in range(0xA0, 0xC0):
+    _FIXED_SIZE[_c] = 1 + (_c & 0x1F)
+for _c, _n in {0xCC: 2, 0xD0: 2, 0xCD: 3, 0xD1: 3, 0xCA: 5, 0xCE: 5, 0xD2: 5,
+               0xCB: 9, 0xCF: 9, 0xD3: 9, 0xD4: 3, 0xD5: 4, 0xD6: 6,
+               0xD7: 10, 0xD8: 18}.items():
+    _FIXED_SIZE[_c] = _n
+del _c, _n
+# lead byte -> (big-endian length field width, items per length unit,
+# gap): items per unit is 1 for arrays, 2 for maps and 0 for str/bin/ext,
+# whose length counts payload bytes; gap is the ext type byte that sits
+# between an ext's length field and its payload
+_LENGTH_FIELD = {
+    0xC4: (1, 0, 0), 0xC5: (2, 0, 0), 0xC6: (4, 0, 0),  # bin 8/16/32
+    0xD9: (1, 0, 0), 0xDA: (2, 0, 0), 0xDB: (4, 0, 0),  # str 8/16/32
+    0xC7: (1, 0, 1), 0xC8: (2, 0, 1), 0xC9: (4, 0, 1),  # ext 8/16/32
+    0xDC: (2, 1, 0), 0xDD: (4, 1, 0),  # array 16/32
+    0xDE: (2, 2, 0), 0xDF: (4, 2, 0),  # map 16/32
+}
 
-def _try_decode(buf: bytes):
-    """Decode one top-level msgpack value from the head of `buf`.
-    Returns (value, consumed) or None if more bytes are needed."""
-    if not buf:
-        return None
+
+class FrameOverflow(Exception):
+    """More than `max_buffer` bytes arrived without completing a frame."""
+
+
+class FrameScanner:
+    """Splits a byte stream that arrives in pieces into whole top-level
+    msgpack values ("frames"), handing each one's bytes out once in
+    `ready`.
+
+    The scan resumes where the previous `feed` stopped. It reads only
+    lead bytes and length fields, jumps over str/bin/ext payloads, and
+    keeps one count per open container (items still to come), so the
+    bytes it examines over a frame's whole arrival stay about one per
+    value however many reads the frame spans (`examined` counts them).
+    Nesting deeper than MAX_DEPTH raises MsgpackError before the stack
+    grows past it; so does a lead byte msgpack never uses.
+    """
+
+    MAX_DEPTH = 64
+
+    def __init__(self) -> None:
+        self._buf = bytearray()
+        # next lead byte to read; runs past the buffer's end while a
+        # payload it already jumped over is still arriving
+        self._pos = 0
+        self._stack: list[int] = []
+        self._end: int | None = None  # end of a frame whose tail is in flight
+        self.ready: collections.deque[bytes] = collections.deque()
+        self.examined = 0
+
+    @property
+    def buffered(self) -> int:
+        """Bytes held that belong to no complete frame yet."""
+        return len(self._buf)
+
+    def feed(self, data: bytes) -> None:
+        buf, stack = self._buf, self._stack
+        buf += data
+        pos, n, examined = self._pos, len(buf), 0
+        ends = [] if self._end is None else [self._end]
+        while pos < n:
+            c = buf[pos]
+            size = _FIXED_SIZE[c]
+            if size:
+                examined += 1
+                pos += size
+            elif 0x80 <= c <= 0x9F:  # fixmap / fixarray with items
+                examined += 1
+                pos += 1
+                self._push((c & 0x0F) * (2 if c < 0x90 else 1))
+                continue
+            else:
+                spec = _LENGTH_FIELD.get(c)
+                if spec is None:
+                    raise MsgpackError(f"unsupported msgpack code 0x{c:02x}")
+                width, per_unit, gap = spec
+                head = pos + 1 + width
+                if head > n:  # the length field itself is split: re-read it
+                    examined += n - pos
+                    break
+                examined += 1 + width
+                length = int.from_bytes(buf[pos + 1 : head], "big")
+                if per_unit and length:
+                    pos = head
+                    self._push(length * per_unit)
+                    continue
+                pos = head + gap + length
+            # a value ended at `pos`: close each container it completes
+            while stack:
+                stack[-1] -= 1
+                if stack[-1]:
+                    break
+                stack.pop()
+            else:
+                ends.append(pos)
+        self._pos = pos
+        self.examined += examined
+        start = 0
+        for end in ends:
+            if end > n:  # only the last frame can still be arriving
+                break
+            self.ready.append(bytes(buf[start:end]))
+            start = end
+        self._end = end - start if ends and end > n else None
+        if start:
+            del buf[:start]
+            self._pos -= start
+
+    def _push(self, items: int) -> None:
+        if len(self._stack) >= self.MAX_DEPTH:
+            raise MsgpackError(f"frame nests deeper than {self.MAX_DEPTH}")
+        self._stack.append(items)
+
+
+async def read_frame(reader, frames: FrameScanner, max_buffer: int | None = None):
+    """The next frame from `reader`, decoded once from its own bytes.
+
+    Raises ConnectionError when the peer closes first, FrameOverflow when
+    more than `max_buffer` bytes wait without completing a frame, and
+    MsgpackError when the frame is malformed (bad structure, unsupported
+    code or invalid UTF-8)."""
+    while not frames.ready:
+        if max_buffer is not None and frames.buffered > max_buffer:
+            raise FrameOverflow(f"{frames.buffered} bytes without a whole frame")
+        chunk = await reader.read(65536)
+        if not chunk:
+            raise ConnectionError("peer closed")
+        frames.feed(chunk)
     try:
-        value, consumed = _decode_value(buf, 0)
-    except (IndexError, struct.error, UnicodeDecodeError):
-        # truncated frame — wait for more bytes. UnicodeDecodeError covers
-        # a read boundary landing mid multi-byte UTF-8 character inside a
-        # str field: the partial slice is undecodable until more arrives.
-        return None
-    if consumed > len(buf):
-        # a trailing str/bin length field pointed past the buffer: the
-        # slice silently came up short, so the frame is incomplete
-        return None
-    return value, consumed
+        return _decode_value(frames.ready.popleft(), 0)[0]
+    except UnicodeDecodeError as e:
+        raise MsgpackError(f"invalid UTF-8 in frame: {e}") from None
 
 
 def _enc_map(d: dict) -> bytes:
@@ -158,6 +286,7 @@ class ForwardServer:
             "acks": 0,
             "rejected": 0,
             "overflowed": 0,
+            "malformed": 0,
         }
 
     # ------------------------------------------------------------ lifecycle
@@ -274,11 +403,10 @@ class ForwardServer:
         self.stats["entries"] += n_entries
 
     # ------------------------------------------------------------ handshake
-    async def _handshake(self, reader, writer) -> tuple[bool, bytes]:
-        """Run the HELO/PING/PONG exchange. Returns (ok, leftover) where
-        `leftover` is any bytes the client pipelined behind its PING frame
-        (event frames sent without waiting for PONG) — the session loop
-        must seed its buffer with them rather than drop them."""
+    async def _handshake(self, reader, writer, frames: FrameScanner) -> bool:
+        """Run the HELO/PING/PONG exchange. Event frames a client pipelined
+        behind its PING (sent without waiting for PONG) stay in `frames`
+        for the session loop."""
         helo = _enc_array(
             [
                 _enc_str("HELO"),
@@ -289,17 +417,7 @@ class ForwardServer:
         )
         writer.write(helo)
         await writer.drain()
-        buf = bytearray()
-        while True:
-            got = _try_decode(bytes(buf))
-            if got is not None:
-                ping, consumed = got
-                del buf[:consumed]
-                break
-            chunk = await reader.read(65536)
-            if not chunk:
-                return False, b""
-            buf += chunk
+        ping = await read_frame(reader, frames, self.max_buffer)
         ok, reason = False, ""
         if (
             isinstance(ping, list)
@@ -329,7 +447,7 @@ class ForwardServer:
         await writer.drain()
         if not ok:
             self.stats["rejected"] += 1
-        return ok, bytes(buf)
+        return ok
 
     # ------------------------------------------------------------- sessions
     async def _handle(self, reader, writer) -> None:
@@ -337,34 +455,24 @@ class ForwardServer:
         task = asyncio.current_task()
         self._conn_tasks.add(task)
         self._conn_writers.add(writer)
+        frames = FrameScanner()
         try:
-            buf = bytearray()
-            if self.shared_key is not None:
-                ok, leftover = await self._handshake(reader, writer)
-                if not ok:
-                    return
-                buf += leftover
+            if self.shared_key is not None and not await self._handshake(
+                reader, writer, frames
+            ):
+                return
             while True:
-                # drain complete frames first — the handshake may have
-                # seeded the buffer with pipelined event frames
-                while True:
-                    got = _try_decode(bytes(buf))
-                    if got is None:
-                        break
-                    frame, consumed = got
-                    del buf[:consumed]
-                    await self._dispatch(frame, writer)
-                # memory backstop: a client streaming bytes that never
-                # decode into a frame (garbage, or a single frame larger
-                # than max_buffer) would otherwise grow the buffer
-                # without bound — drop the connection, keep the server
-                if len(buf) > self.max_buffer:
-                    self.stats["overflowed"] += 1
-                    break
-                chunk = await reader.read(65536)
-                if not chunk:
-                    break
-                buf += chunk
+                frame = await read_frame(reader, frames, self.max_buffer)
+                await self._dispatch(frame, writer)
+        except ConnectionError:
+            pass  # the peer closed or reset the connection
+        except FrameOverflow:
+            # memory backstop: a client streaming bytes that never
+            # complete a frame (garbage, or a single frame larger than
+            # max_buffer) is dropped, the server keeps serving
+            self.stats["overflowed"] += 1
+        except MsgpackError:
+            self.stats["malformed"] += 1
         finally:
             self._conn_tasks.discard(task)
             self._conn_writers.discard(writer)
@@ -377,8 +485,8 @@ class ForwardServer:
                 pass
 
     async def _dispatch(self, frame, writer) -> None:
-        if not isinstance(frame, list) or not frame or not isinstance(frame[0], str):
-            raise MsgpackError("frame is not [tag, ...]")
+        if not isinstance(frame, list) or len(frame) < 2 or not isinstance(frame[0], str):
+            raise MsgpackError("frame is not [tag, entries, ...]")
         tag = frame[0]
         option = None
         if isinstance(frame[1], (bytes, bytearray)):
@@ -455,15 +563,16 @@ class ForwardClient:
         self.host, self.port = host, port
         self.shared_key, self.hostname = shared_key, hostname
         self._ssl = ssl_context
-        self._r = self._w = None
+        self._r = self._w = self._frames = None
 
     async def connect(self) -> bool:
         self._r, self._w = await asyncio.open_connection(
             self.host, self.port, ssl=self._ssl
         )
+        self._frames = FrameScanner()
         if self.shared_key is None:
             return True
-        helo = await self._read_frame()
+        helo = await read_frame(self._r, self._frames)
         if not (isinstance(helo, list) and helo[0] == "HELO"):
             return False
         nonce = helo[1]["nonce"]
@@ -481,25 +590,14 @@ class ForwardClient:
         )
         self._w.write(ping)
         await self._w.drain()
-        pong = await self._read_frame()
+        pong = await read_frame(self._r, self._frames)
         return bool(isinstance(pong, list) and pong[0] == "PONG" and pong[1])
-
-    async def _read_frame(self):
-        buf = bytearray()
-        while True:
-            got = _try_decode(bytes(buf))
-            if got is not None:
-                return got[0]
-            chunk = await self._r.read(65536)
-            if not chunk:
-                raise ConnectionError("peer closed during frame read")
-            buf += chunk
 
     async def send_raw(self, payload: bytes, await_ack: bool = False):
         self._w.write(payload)
         await self._w.drain()
         if await_ack:
-            return await self._read_frame()
+            return await read_frame(self._r, self._frames)
         return None
 
     async def close(self) -> None:

@@ -12,6 +12,7 @@ import gzip
 import pytest
 
 from fluent_server_spark.sources.fluentfile import (
+    _enc_int,
     decode_spool_blob,
     encode_entry,
     encode_event_time,
@@ -73,6 +74,7 @@ def test_spark_read_spool_files(spark, tmp_path):
         [(t0 + 100 + i, {"level": "WARN", "i": i}) for i in range(3)],
         compress=True,
     )
+    open(tmp_path / "svc.empty.msgpack", "wb").close()  # zero rows
     df = read_spool_files(spark, str(tmp_path)).orderBy("tag", "ts")
     rows = df.collect()
     assert len(rows) == 8
@@ -144,3 +146,97 @@ def test_committed_spool_fixture_matches_regenerated(tmp_path):
         with open(tmp_path / name, "rb") as f:
             regenerated = f.read()
         assert committed == regenerated, f"fixture drift in {name}"
+
+
+# ------------------------------------------------ Arrow decode parity
+# decode_spool_batch builds Arrow columns directly; the reference below is
+# the per-row decode it replaced (pd.Timestamp + Timedelta and a str()'d
+# dict per entry), kept here so the two must agree row for row.
+
+T0 = 1_700_000_000
+
+
+def _reference_rows(path, blob):
+    import pandas as pd
+
+    from fluent_server_spark.sources.fluentfile import _tag_from_path
+
+    return [
+        {
+            "tag": _tag_from_path(path),
+            "ts": pd.Timestamp(sec, unit="s") + pd.Timedelta(nsec // 1000, unit="us"),
+            "ts_nsec": nsec,
+            "record": list(
+                {str(k): (None if v is None else str(v)) for k, v in rec.items()}.items()
+            ),
+        }
+        for sec, nsec, rec in decode_spool_blob(blob)
+    ]
+
+
+def _assert_parity(files):
+    from fluent_server_spark.sources.fluentfile import decode_spool_batch
+
+    paths = [p for p, _ in files]
+    blobs = [b for _, b in files]
+    got = decode_spool_batch(paths, blobs).to_pylist()
+    want = [row for p, b in files for row in _reference_rows(p, b)]
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g["ts"] == w["ts"].to_pydatetime()
+        assert (g["tag"], g["ts_nsec"], g["record"]) == (w["tag"], w["ts_nsec"], w["record"])
+    return got
+
+
+def test_arrow_decode_matches_per_row_reference_for_every_value_type():
+    values = {
+        "none": None, "t": True, "f": False, "zero": 0, "neg": -33,
+        "neg64": -(1 << 40), "u64": (1 << 64) - 1, "pi": 3.141592653589793,
+        "big": 1e20, "tiny": -2.5e-300, "nan": float("nan"), "inf": float("inf"),
+        "s": "plain", "u": "grüße — ünïcode", "empty": "", "long": "x" * 70_000,
+    }
+    blob = b"".join(
+        encode_entry(ts, values)
+        for ts in (T0, (T0 + 1, 999_999_999), (T0 + 2, 1), 0, -5, (1 << 32) - 1)
+    )
+    got = _assert_parity([("/spool/000001/app.all.msgpack", blob)])
+    rec = dict(got[0]["record"])
+    assert rec["none"] is None and rec["t"] == "True" and rec["u64"] == str((1 << 64) - 1)
+    assert rec["nan"] == "nan" and rec["big"] == "1e+20"
+
+
+def test_arrow_decode_repeated_and_non_str_keys_keep_last_value():
+    # map of 3 pairs: "a" -> 1, "a" -> 2, int key 7 -> "x"; then an entry
+    # whose int key 1 and str key "1" collide once stringified
+    e1 = b"\x92" + _enc_int(T0) + b"\x83" + b"\xa1a\x01" + b"\xa1a\x02" + b"\x07\xa1x"
+    e2 = b"\x92" + _enc_int(T0) + b"\x82" + b"\x01\xa1p" + b"\xa11\xa1q"
+    got = _assert_parity([("dup.msgpack", e1 + e2)])
+    assert got[0]["record"] == [("a", "2"), ("7", "x")]
+    assert got[1]["record"] == [("1", "q")]
+
+
+def test_arrow_decode_empty_files_give_zero_rows():
+    got = _assert_parity([("a.msgpack", b""), ("b.msgpack.gz", gzip.compress(b"", mtime=0))])
+    assert got == []
+
+
+@pytest.mark.parametrize(
+    "ts", [1 << 40, -(1 << 40), (1 << 64) - 1, (T0, 1_000_000_000)]
+)
+def test_arrow_decode_out_of_range_time_fails_loudly(ts):
+    from fluent_server_spark.sources.fluentfile import MsgpackError, decode_spool_batch
+
+    blob = encode_entry(T0, {"ok": 1}) + encode_entry(ts, {"bad": 1})
+    with pytest.raises(MsgpackError, match="time"):
+        decode_spool_batch(["t.msgpack"], [blob])
+
+
+def test_arrow_decode_gzip_and_eventtime_nanoseconds_round_trip():
+    entries = [((T0 + i, 999_999_999 - i), {"i": i}) for i in range(3)] + [(T0 + 9, {"i": 9})]
+    raw = b"".join(encode_entry(t, r) for t, r in entries)
+    got = _assert_parity(
+        [("svc.raw.msgpack", raw), ("svc.gz.msgpack.gz", gzip.compress(raw, mtime=0))]
+    )
+    assert [r["tag"] for r in got] == ["svc.raw"] * 4 + ["svc.gz"] * 4
+    assert [r["ts_nsec"] for r in got[:4]] == [999_999_999, 999_999_998, 999_999_997, 0]
+    assert [{**r, "tag": "svc.raw"} for r in got[4:]] == got[:4]

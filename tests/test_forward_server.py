@@ -199,21 +199,18 @@ def test_events_pipelined_behind_ping_not_dropped(spark, tmp_path):
     """A client that pipelines event frames behind PING without waiting
     for PONG must not lose them (the handshake's read may pull them into
     its buffer; the session loop has to inherit the leftover)."""
-    from fluent_server_spark.sources.forward_server import _sha512_hex, _try_decode
+    from fluent_server_spark.sources.forward_server import (
+        FrameScanner,
+        _sha512_hex,
+        read_frame,
+    )
 
     async def scenario():
         srv = ForwardServer(str(tmp_path / "spool"), shared_key="s3cret")
         await srv.start()
         try:
             r, w = await asyncio.open_connection("127.0.0.1", srv.port)
-            buf = bytearray()
-            while True:
-                got = _try_decode(bytes(buf))
-                if got is not None:
-                    helo, consumed = got
-                    del buf[:consumed]
-                    break
-                buf += await r.read(65536)
+            helo = await read_frame(r, FrameScanner())
             assert helo[0] == "HELO"
             import secrets as _secrets
 
@@ -375,6 +372,184 @@ def test_undecodable_flood_drops_connection_not_server(tmp_path):
 
     assert asyncio.run(outer()) == {"ack": "h"}
     assert srv_stats["overflowed"] == 1 and srv_stats["entries"] == 1
+
+
+def _big_forward_entries(n=8500):
+    return [((T0 + i, i * 7919 % 10**9), {"msg": f"entry {i} " + "x" * 100, "n": i})
+            for i in range(n)]
+
+
+async def _send_in_pieces(port, payload, piece):
+    """Write `payload` in `piece`-byte writes (yielding between them so
+    the server reads them apart), then return (every frame the server
+    sent back, count of trailing bytes that form no frame). The server
+    closes once it sees our EOF, so the reply is complete."""
+    from fluent_server_spark.sources.fluentfile import _decode_value
+    from fluent_server_spark.sources.forward_server import FrameScanner
+
+    r, w = await asyncio.open_connection("127.0.0.1", port)
+    try:
+        for i in range(0, len(payload), piece):
+            w.write(payload[i : i + piece])
+            await w.drain()
+            await asyncio.sleep(0.002)
+        w.write_eof()
+        reply = await asyncio.wait_for(r.read(), timeout=30)
+    except (BrokenPipeError, ConnectionResetError):
+        reply = b""  # the server dropped us mid-send
+    w.close()
+    frames = FrameScanner()
+    frames.feed(reply)
+    return [_decode_value(f, 0)[0] for f in frames.ready], frames.buffered
+
+
+def _serve(tmp_path, name, payload, piece, **kw):
+    async def scenario():
+        srv = ForwardServer(str(tmp_path / name), **kw)
+        await srv.start()
+        try:
+            replies = await _send_in_pieces(srv.port, payload, piece)
+            await asyncio.sleep(0.05)
+        finally:
+            await srv.stop()
+        return replies, srv.stats
+
+    return asyncio.run(scenario())
+
+
+def _spool_bytes(tmp_path, name, tag):
+    with open(tmp_path / name / "000000" / f"{tag}.msgpack", "rb") as f:
+        return f.read()
+
+
+def test_large_forward_frame_in_64k_reads_acks_once_and_lands_identical(tmp_path):
+    """A >1 MB Forward-mode chunk spanning many 64 KiB reads is decoded
+    once and acked once, and lands the same bytes as a single write."""
+    entries = _big_forward_entries()
+    frame = _forward_frame("big.fwd", entries, option={"chunk": "big"})
+    assert len(frame) >= 1 << 20
+    (acks, tail), stats = _serve(tmp_path, "pieces", frame, 65536)
+    assert acks == [{"ack": "big"}] and tail == 0
+    assert stats["acks"] == 1 and stats["entries"] == len(entries)
+    (acks1, _), _ = _serve(tmp_path, "whole", frame, len(frame))
+    assert acks1 == [{"ack": "big"}]
+    landed = _spool_bytes(tmp_path, "pieces", "big.fwd")
+    assert landed == _spool_bytes(tmp_path, "whole", "big.fwd")
+    assert landed == b"".join(encode_entry(t, r) for t, r in entries)
+
+
+def test_frame_dribbled_one_byte_at_a_time_acks_once(tmp_path):
+    """Every byte boundary is a read boundary, so splits fall inside the
+    array32 header, the str8 length, the EventTime ext and a multi-byte
+    UTF-8 character; the frame is still seen once, whole."""
+    from fluent_server_spark.sources.forward_server import FrameScanner
+
+    record = {"msg": "grüße " + "y" * 40, "n": 1}  # > 31 bytes: str8
+    entry = _enc_array([encode_event_time(T0, 123_456_789), _enc_map(record)])
+    frame = _enc_array([
+        _enc_str("drib.tag"),
+        b"\xdd" + struct.pack(">I", 1) + entry,  # array32 of one entry
+        _enc_map({"chunk": "d1"}),
+    ])
+    for marker in (b"\xdd\x00\x00\x00\x01", b"\xd9", b"\xd7\x00", "ü".encode()):
+        assert marker in frame
+
+    frames = FrameScanner()
+    for i in range(len(frame)):
+        assert not frames.ready
+        frames.feed(frame[i : i + 1])
+    assert list(frames.ready) == [frame] and frames.buffered == 0
+
+    (acks, tail), stats = _serve(tmp_path, "spool", frame, 1)
+    assert acks == [{"ack": "d1"}] and tail == 0
+    assert stats["entries"] == 1 and stats["acks"] == 1
+    assert _spool_bytes(tmp_path, "spool", "drib.tag") == encode_entry(
+        (T0, 123_456_789), record
+    )
+
+
+def test_two_frames_in_one_write_both_handled(tmp_path):
+    both = (_message_frame("two.a", T0, {"n": 1}, option={"chunk": "a"})
+            + _message_frame("two.a", T0 + 1, {"n": 2}, option={"chunk": "b"}))
+    (acks, tail), stats = _serve(tmp_path, "spool", both, len(both))
+    assert acks == [{"ack": "a"}, {"ack": "b"}] and tail == 0
+    assert stats["entries"] == 2
+
+
+def test_overflow_mid_frame_drops_connection(tmp_path):
+    """max_buffer still bounds a frame the scanner is inside of (open
+    containers on its stack), not only an unfinished payload."""
+    head = b"\x93" + _enc_str("of.tag") + b"\xdd" + struct.pack(">I", 100_000)
+    body = b"".join(encode_entry(T0, {"msg": "z" * 50}) for _ in range(200))
+    (acks, _), stats = _serve(tmp_path, "spool", head + body, 1024, max_buffer=4096)
+    assert acks == []
+    assert stats["overflowed"] == 1 and stats["entries"] == 0
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        # Message mode whose record value is not UTF-8
+        b"\x94" + _enc_str("bad.tag") + _enc_int(T0) + b"\x81\xa1k\xa2\xff\xfe"
+        + _enc_map({"chunk": "x"}),
+        _enc_array([_enc_str("tag.only")]),  # no entries at all
+    ],
+    ids=["invalid_utf8", "tag_only"],
+)
+def test_malformed_frame_drops_connection_at_once(tmp_path, bad):
+    """A complete frame that can never be handled (a str that is not
+    UTF-8, a frame without entries) drops the connection as soon as the
+    frame is whole, not after max_buffer more bytes, and counts as
+    malformed."""
+
+    async def scenario():
+        srv = ForwardServer(str(tmp_path / "spool"))
+        await srv.start()
+        try:
+            r, w = await asyncio.open_connection("127.0.0.1", srv.port)
+            w.write(bad)
+            await w.drain()
+            # no EOF from us: only the server can end this read
+            rest = await asyncio.wait_for(r.read(), timeout=10)
+            w.close()
+            await asyncio.sleep(0.05)
+        finally:
+            await srv.stop()
+        return rest, srv.stats
+
+    rest, stats = asyncio.run(scenario())
+    assert rest == b""
+    assert stats["malformed"] == 1 and stats["entries"] == 0
+
+
+def test_deep_nesting_rejected_with_bounded_stack(tmp_path):
+    from fluent_server_spark.sources.fluentfile import MsgpackError
+    from fluent_server_spark.sources.forward_server import FrameScanner
+
+    frames = FrameScanner()
+    with pytest.raises(MsgpackError, match="nests deeper"):
+        frames.feed(b"\x91" * 10_000)
+    assert len(frames._stack) == FrameScanner.MAX_DEPTH
+
+    (acks, _), stats = _serve(tmp_path, "spool", b"\x91" * 10_000, 65536)
+    assert acks == [] and stats["malformed"] == 1
+
+
+def test_scanner_work_is_linear_in_frame_length():
+    """Work count, not timing: over a frame arriving in N reads the
+    scanner examines at most 2x the frame's bytes (re-decoding from the
+    first byte after every read would examine about N/2 times them)."""
+    from fluent_server_spark.sources.forward_server import FrameScanner
+
+    frame = _forward_frame("w.tag", _big_forward_entries(), option={"chunk": "w"})
+    frames = FrameScanner()
+    reads = 0
+    for i in range(0, len(frame), 65536):
+        frames.feed(frame[i : i + 65536])
+        reads += 1
+    assert reads >= 16
+    assert list(frames.ready) == [frame]
+    assert frames.examined <= 2 * len(frame)
 
 
 def test_udp_heartbeat_echoes():

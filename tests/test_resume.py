@@ -74,3 +74,56 @@ def test_resume_with_different_group_count_refuses(spark, turns_sdf, tmp_path):
     pipe2 = TranscriptPipeline(spark, cfg2)
     with pytest.raises(ValueError, match="n_groups"):
         pipe2.run(turns_sdf, run_id="g4")
+
+
+def _commit(log, run_id, group_id):
+    from fluent_server_spark.plans.checkpoint import GroupCommit
+
+    log.commit(GroupCommit(run_id, group_id, 4, 10, {"s": 10}, 0.0, 1.0))
+
+
+def test_checkpoint_skips_torn_last_line(tmp_path):
+    """A crash mid-commit leaves an unterminated last line; both readers
+    skip it (that group was never committed) instead of raising."""
+    from fluent_server_spark.plans.checkpoint import CheckpointLog
+
+    log = CheckpointLog(str(tmp_path / "ck.jsonl"))
+    _commit(log, "r", 0)
+    _commit(log, "r", 1)
+    with open(log.path, "a") as f:
+        f.write('{"run_id": "r", "group_id": 2, "n_gr')
+    assert sorted(log.committed_groups("r", expected_n_groups=4)) == [0, 1]
+    assert [c.group_id for c in log.all_committed()] == [0, 1]
+
+
+def test_checkpoint_commit_after_torn_line_starts_fresh_line(tmp_path):
+    from fluent_server_spark.plans.checkpoint import CheckpointLog
+
+    log = CheckpointLog(str(tmp_path / "ck.jsonl"))
+    _commit(log, "r", 0)
+    with open(log.path, "a") as f:
+        f.write('{"run_id": "r", "gro')
+    _commit(log, "r", 2)
+    with open(log.path) as f:
+        lines = f.read().split("\n")
+    assert lines[-1] == "" and len(lines) == 3  # two whole records
+    assert sorted(log.committed_groups("r")) == [0, 2]
+    assert [c.group_id for c in log.all_committed()] == [0, 2]
+
+
+def test_checkpoint_malformed_inner_line_still_raises(tmp_path):
+    """Only the torn tail is forgiven: a bad line with records after it
+    is damage, and resume must not silently skip past it."""
+    import json
+
+    from fluent_server_spark.plans.checkpoint import CheckpointLog
+
+    log = CheckpointLog(str(tmp_path / "ck.jsonl"))
+    _commit(log, "r", 0)
+    with open(log.path, "a") as f:
+        f.write("{not json\n")
+    _commit(log, "r", 1)
+    with pytest.raises(json.JSONDecodeError):
+        log.committed_groups("r")
+    with pytest.raises(json.JSONDecodeError):
+        log.all_committed()
